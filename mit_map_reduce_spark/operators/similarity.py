@@ -347,44 +347,30 @@ def _trained_centroids(emb: DataFrame) -> DataFrame:
 
 def _centroids_artifact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Train-once centroid artifact: the k-means quantizer trains on
-    the first call per corpus and is materialized as a parquet
-    side-output; every later search (same process or a later one on the
-    same machine) reads the 16-row artifact instead of re-running the
-    Lloyd iterations inside the query — the faiss ``train()`` /
-    ``search()`` split. Keyed by the corpus path; written to a temp dir
-    and atomically renamed so a crashed writer can never leave a
-    half-artifact that later runs silently trust.
+    the first call per session and corpus and is materialized as a
+    parquet session artifact (``catalog.session_artifact``); every
+    later search in the session reads the 16-row artifact instead of
+    re-running the Lloyd iterations inside the query — the faiss
+    ``train()`` / ``search()`` split. The key carries every training
+    parameter, so a parameter change never reads centroids trained
+    under the old ones.
     """
-    import hashlib
     import os
-    import shutil
-    import uuid
 
-    from mit_map_reduce_spark.catalog import corpus_fingerprint, scratch_base
+    from mit_map_reduce_spark.catalog import session_artifact
 
-    # The key includes every training parameter: a code change that
-    # alters training must never silently reuse an artifact trained by
-    # the old code (the artifact would win any staleness race against
-    # the oracle, which always reflects current parameters). It also
-    # includes the embeddings table's content fingerprint — the driver
-    # regenerates testdata in place, and centroids trained on the OLD
-    # corpus would silently misassign cells on the new one.
-    fp = corpus_fingerprint(sf_dir, "embeddings")
-    params = f"{os.path.abspath(sf_dir)}|{fp}|k={K_CELLS}|it={KMEANS_ITERS}|dp={MEAN_DIGITS}|mod={TRAIN_SAMPLE_MOD}"
-    tag = hashlib.md5(params.encode()).hexdigest()[:12]
-    art = os.path.join(scratch_base(), "mmrs_ivf_centroids", tag)
-    if not os.path.isdir(art):
-        cents = _trained_centroids(_emb_with_norm(spark, sf_dir))
-        tmp = art + "." + uuid.uuid4().hex[:8]
-        cents.coalesce(1).write.mode("overwrite").parquet(tmp)
-        os.makedirs(os.path.dirname(art), exist_ok=True)
-        try:
-            os.rename(tmp, art)
-        except OSError:
-            # lost the race to a concurrent trainer; its artifact is
-            # identical (training is deterministic) — keep it
-            shutil.rmtree(tmp, ignore_errors=True)
-    return spark.read.parquet(art)
+    key = (
+        f"ivf_centroids|{os.path.abspath(sf_dir)}|k={K_CELLS}|it={KMEANS_ITERS}"
+        f"|dp={MEAN_DIGITS}|mod={TRAIN_SAMPLE_MOD}"
+    )
+    path = session_artifact(
+        spark,
+        key,
+        lambda p: _trained_centroids(_emb_with_norm(spark, sf_dir))
+        .coalesce(1)
+        .write.parquet(p),
+    )
+    return spark.read.parquet(path)
 
 
 def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -396,7 +382,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     search is an equi-join on the cell key — like the LSH path, the
     corpus never cross-joins itself. Tie-breaks (equal cosine) go to
     the lower centroid id in both engines. Training happens at most
-    once per corpus (``_centroids_artifact``); the search itself is a
+    once per session (``_centroids_artifact``); the search itself is a
     single corpus scan + two broadcast joins.
     """
     # Normed corpus comes from the session-shared cache (one persisted

@@ -8,31 +8,23 @@ second full scan), and aggregates; the oracle computes the same
 aggregate straight from the parquet. A lossless round trip is exactly
 "the numbers don't change because the bytes took a detour".
 
-Scratch copies are written once per (corpus, format) under
-``catalog.scratch_base()`` (tempdir locally; SPARK_GRAFT_SCRATCH_DIR
-on a shared filesystem for multi-node clusters) and reused across
-sessions (same keyed-artifact discipline as the IVF centroids; atomic
-rename so a crashed writer cannot publish a partial copy). The one exception is ``src_csv_malformed_quarantine``, which
-exercises the PERMISSIVE parser over in-memory-built lines and touches
-no filesystem at all (round-9 rewrite; the no-filesystem property is
-pytest-pinned).
+Each round-trip copy is a session artifact
+(``catalog.session_artifact``): written once per session under its
+process-unique scratch dir and swept at exit, so every run reads bytes
+it wrote itself from the parquet it was given. The one exception is
+``src_csv_malformed_quarantine``, which exercises the PERMISSIVE
+parser over in-memory-built lines and touches no filesystem at all
+(round-9 rewrite; the no-filesystem property is pytest-pinned).
 """
 
 from __future__ import annotations
 
-import contextlib
-import glob
-import hashlib
 import os
-import shutil
-import threading
-import time
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mit_map_reduce_spark.catalog import corpus_fingerprint, load_table, scratch_base
+from mit_map_reduce_spark.catalog import load_table, session_artifact
 from mit_map_reduce_spark.functions.columns import money_sum, sql_money_sum
 from mit_map_reduce_spark.sources.io import (
     read_csv,
@@ -56,183 +48,15 @@ ORDERS_SCHEMA = (
 )
 
 
-#: Artifact layout revision — part of every artifact key, bumped when
-#: the publish protocol changes so artifacts written under an older
-#: protocol can never be read back. r7: atomic-mkdir-lock writers +
-#: marker-validated publish (the round-6 red driver row on
-#: src_csv_malformed_quarantine is attributed to a stale/partial
-#: artifact under the old check-by-listing protocol).
-_ARTIFACT_REV = "r7"
-
-#: Dropped INSIDE the temp dir before the atomic rename: its presence
-#: under the final path proves a complete, atomically-published
-#: artifact (Spark's own _SUCCESS is absent for multi-subdir writers).
-_PUBLISH_MARKER = "_MMRS_PUBLISHED"
-
-#: A lock this old with nothing published belongs to a crashed writer;
-#: expire it so the shared path heals instead of every later session
-#: timing out and paying a private rewrite.
-_LOCK_TTL_S = 300.0
-
-#: Lock-wait poll interval; patched down in tests.
-_LOCK_POLL_S = 0.5
-
-
-def _artifact_dir(sf_dir: str, fmt: str, table: str) -> str:
-    # fmt doubles as a params/version key: changing the serialization
-    # options must never silently reuse an artifact written with the
-    # old ones (same rule as the IVF centroid artifact). The source
-    # table's content fingerprint is part of the key too: the driver
-    # regenerates testdata in place between rounds, and a path-only key
-    # would keep aggregating the STALE scratch copy while the oracle
-    # reads the fresh parquet.
-    fp = corpus_fingerprint(sf_dir, table)
-    key = f"{os.path.abspath(sf_dir)}|{fmt}|{_ARTIFACT_REV}|{fp}"
-    tag = hashlib.md5(key.encode()).hexdigest()[:12]
-    return os.path.join(scratch_base(), "mmrs_source_rt", tag)
-
-
-def _is_published(out_dir: str) -> bool:
-    return os.path.exists(os.path.join(out_dir, _PUBLISH_MARKER))
-
-
-def _write_and_publish(write_fn, out_dir: str) -> None:
-    tmp = out_dir + ".tmp" + uuid.uuid4().hex[:8]
-    shutil.rmtree(tmp, ignore_errors=True)
-    # Keep the temp dir's mtime visibly fresh while the write runs
-    # (same toucher pattern as the bucketed-table writer in
-    # relational.py): the under-lock sweep in _ensure_written reclaims
-    # crashed writers' leftovers by dir mtime, and a dir's own mtime
-    # does not advance while one long part file streams INTO it — so
-    # without the toucher a live writer admitted by a misfired lock
-    # expiry could have its in-flight dir swept out from under it
-    # (round-9 advice). With it, a stale mtime proves the writer
-    # stopped touching: crashed, not slow.
-    stop = threading.Event()
-
-    def _keep_fresh() -> None:
-        while not stop.wait(60.0):
-            with contextlib.suppress(OSError):
-                os.utime(tmp)  # exists once the writer creates it
-
-    threading.Thread(target=_keep_fresh, daemon=True).start()
-    try:
-        write_fn(tmp)
-    finally:
-        stop.set()
-    with open(os.path.join(tmp, _PUBLISH_MARKER), "w") as fh:
-        fh.write("ok\n")
-    # Last-moment re-check: if a concurrent writer published while we
-    # were writing (possible only if lock expiry mis-fired on a live
-    # writer), KEEP the published artifact — never delete data a
-    # reader may already be scanning — and discard our copy.
-    if _is_published(out_dir):
-        shutil.rmtree(tmp, ignore_errors=True)
-        return
-    # Move unpublished leftovers aside ATOMICALLY rather than rmtree on
-    # the live path: rmtree is not atomic, so a racer publishing between
-    # the check above and the delete could be left half-deleted with the
-    # marker still present (round-7 advice). A rename either moves the
-    # whole dir or nothing.
-    trash = out_dir + ".trash" + uuid.uuid4().hex[:8]
-    with contextlib.suppress(OSError):  # ENOENT when out_dir absent — fine
-        os.rename(out_dir, trash)
-    if _is_published(trash):
-        # The racer won between the check and the rename: restore their
-        # complete artifact and discard ours.
-        with contextlib.suppress(OSError):
-            os.rename(trash, out_dir)
-        shutil.rmtree(tmp, ignore_errors=True)
-        shutil.rmtree(trash, ignore_errors=True)  # no-op if restored
-        return
-    try:
-        os.rename(tmp, out_dir)
-    except OSError:  # concurrent writer won the rename
-        shutil.rmtree(tmp, ignore_errors=True)
-    shutil.rmtree(trash, ignore_errors=True)
-
-
-def _expire_stale_lock(lock: str) -> None:
-    """Expire a crashed writer's lock ATOMICALLY: rename it to a
-    unique tombstone first (only one expirer can win the rename; a
-    plain rmdir could instead delete a FRESH lock re-created by a
-    faster expirer — the two-winners race), then remove the
-    tombstone."""
-    tomb = f"{lock}.expired-{uuid.uuid4().hex[:8]}"
-    with contextlib.suppress(OSError):
-        os.rename(lock, tomb)
-        os.rmdir(tomb)
-
-
-def _ensure_written(write_fn, out_dir: str) -> str:
-    """Write-once publish of a shared scratch artifact. Returns the
-    directory to READ — normally ``out_dir``, a session-private copy
-    only if a concurrent writer is wedged.
-
-    Protocol (same as the bucketed-table artifact in
-    relational.rel_bucketed_join_revenue): writers serialize on an
-    atomic ``os.mkdir`` lock; the winner writes to a temp dir, drops
-    ``_PUBLISH_MARKER`` inside it, and ``os.rename``s the whole dir
-    into place, so the marker's presence under the final path proves a
-    complete artifact and a reader can never observe partial state.
-    Losers wait for the marker; a stale lock (older than
-    ``_LOCK_TTL_S`` with nothing published — the writer died between
-    mkdir and its finally) is expired and retaken; a writer that is
-    merely slow makes the loser fall back to a session-private copy —
-    correctness intact, cross-session reuse lost.
-    """
-    if _is_published(out_dir):
-        return out_dir
-    os.makedirs(os.path.dirname(out_dir), exist_ok=True)
-    lock = out_dir + ".lock"
-
-    def _acquire() -> bool:
-        try:
-            os.mkdir(lock)  # atomic: exactly one session wins
-            return True
-        except FileExistsError:
-            return False
-
-    won = _acquire()
-    if not won:
-        try:
-            stale = (time.time() - os.stat(lock).st_mtime) > _LOCK_TTL_S
-        except OSError:  # lock vanished between mkdir attempt and stat
-            stale = False
-        if stale and not _is_published(out_dir):
-            _expire_stale_lock(lock)
-            won = _acquire()
-    if not won:
-        for _ in range(60):  # writer in flight: wait for its publish
-            time.sleep(_LOCK_POLL_S)
-            if _is_published(out_dir):
-                return out_dir
-        priv = f"{out_dir}.pid{os.getpid()}"  # wedged writer: go private
-        if not _is_published(priv):
-            _write_and_publish(write_fn, priv)
-        return priv
-    try:
-        if _is_published(out_dir):  # published while racing for the lock
-            return out_dir
-        # Under the lock: sweep .tmp*/.trash* siblings left by writers
-        # that crashed between their rename steps (mirrors the bucketed-
-        # table sweep in relational.py — nothing else reclaims these, so
-        # crashed runs would otherwise accumulate orders-sized scratch).
-        # Live writers keep their temp dir's mtime fresh via the
-        # toucher thread in _write_and_publish (60 s cadence), so a
-        # leftover older than the 4x-TTL gate provably stopped
-        # touching: crashed, not slow. The wide gate is belt-and-
-        # braces on top of the toucher.
-        now = time.time()
-        for leftover in glob.glob(out_dir + ".tmp*") + glob.glob(out_dir + ".trash*"):
-            with contextlib.suppress(OSError):
-                if now - os.stat(leftover).st_mtime > 4 * _LOCK_TTL_S:
-                    shutil.rmtree(leftover, ignore_errors=True)
-        _write_and_publish(write_fn, out_dir)
-        return out_dir
-    finally:
-        with contextlib.suppress(OSError):
-            os.rmdir(lock)
+def _roundtrip_copy(
+    spark: SparkSession, sf_dir: str, fmt: str, table: str, write_fn
+) -> str:
+    """Session artifact holding ``table`` written through ``fmt``.
+    ``fmt`` doubles as the params key: changing the serialization
+    options must never reuse a copy written with the old ones."""
+    return session_artifact(
+        spark, f"src_rt|{table}|{fmt}|{os.path.abspath(sf_dir)}", write_fn
+    )
 
 
 def src_csv_roundtrip_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -243,12 +67,14 @@ def src_csv_roundtrip_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet-direct aggregate exactly — any formatting loss (precision,
     quoting, nulls) breaks the hash.
     """
-    out = _artifact_dir(sf_dir, f"csv|ntz|{CSV_TS_FORMAT}", "orders")
-    out = _ensure_written(
+    out = _roundtrip_copy(
+        spark,
+        sf_dir,
+        f"csv|ntz|{CSV_TS_FORMAT}",
+        "orders",
         lambda d: write_csv(
             load_table(spark, sf_dir, "orders"), d, options=CSV_TS_OPTS
         ),
-        out,
     )
     back = read_csv(spark, out, ORDERS_SCHEMA, options=CSV_TS_OPTS)
     return back.groupBy("o_orderpriority").agg(
@@ -265,9 +91,12 @@ def src_orc_roundtrip_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORC is self-describing (types survive natively); the filter also
     checks predicate evaluation over the round-tripped columns.
     """
-    out = _artifact_dir(sf_dir, "orc", "lineitem")
-    out = _ensure_written(
-        lambda d: write_orc(load_table(spark, sf_dir, "lineitem"), d), out
+    out = _roundtrip_copy(
+        spark,
+        sf_dir,
+        "orc",
+        "lineitem",
+        lambda d: write_orc(load_table(spark, sf_dir, "lineitem"), d),
     )
     back = read_orc(spark, out)
     return (
@@ -300,12 +129,14 @@ def src_json_roundtrip_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     props (its "k" field) to prove the nested payload survived
     byte-exact.
     """
-    out = _artifact_dir(sf_dir, f"json|{JSON_TS_OPTS['timestampFormat']}", "events")
-    out = _ensure_written(
+    out = _roundtrip_copy(
+        spark,
+        sf_dir,
+        f"json|{JSON_TS_OPTS['timestampFormat']}",
+        "events",
         lambda d: write_json(
             load_table(spark, sf_dir, "events"), d, options=JSON_TS_OPTS
         ),
-        out,
     )
     back = read_json(spark, out, EVENTS_SCHEMA, options=JSON_TS_OPTS)
     return back.groupBy("event_type").agg(
@@ -333,13 +164,15 @@ def src_partitioned_pruning_events(spark: SparkSession, sf_dir: str) -> DataFram
     per-day rollup must match the oracle's direct aggregate — pruning
     changes I/O, never values.
     """
-    out = _artifact_dir(sf_dir, "parquet|partition_by=event_type", "events")
-    out = _ensure_written(
+    out = _roundtrip_copy(
+        spark,
+        sf_dir,
+        "parquet|partition_by=event_type",
+        "events",
         lambda d: load_table(spark, sf_dir, "events")
         .write.mode("overwrite")
         .partitionBy("event_type")
         .parquet(d),
-        out,
     )
     back = spark.read.parquet(out).filter(F.col("event_type").isin(*PRUNE_TYPES))
     return back.groupBy("event_type", F.date_trunc("day", "ts").alias("day")).agg(
@@ -364,8 +197,6 @@ def src_text_kv_roundtrip_wc(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mit_map_reduce_spark.functions.columns import tokenize_letters
     from mit_map_reduce_spark.sources.io import read_text_lines, write_text_kv
 
-    out = _artifact_dir(sf_dir, "textkv|wc", "documents")
-
     def write(d: str) -> None:
         docs = load_table(spark, sf_dir, "documents")
         wc = (
@@ -375,7 +206,7 @@ def src_text_kv_roundtrip_wc(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         write_text_kv(wc, d, n_partitions=4)
 
-    out = _ensure_written(write, out)
+    out = _roundtrip_copy(spark, sf_dir, "textkv|wc", "documents", write)
     lines = read_text_lines(spark, out)
     parsed = lines.select(
         F.regexp_extract("line", r"^(.*) (\S+)$", 1).alias("word"),
@@ -403,8 +234,6 @@ def src_schema_evolution_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     footer-merge at planning time only — data files are read once,
     pruned and pushed down as usual.
     """
-    out = _artifact_dir(sf_dir, "parquet|schema-evo|v1", "orders")
-
     def write(d: str) -> None:
         orders = load_table(spark, sf_dir, "orders")
         legacy = orders.filter(F.col("o_orderkey") % 2 == 0).select(
@@ -416,7 +245,7 @@ def src_schema_evolution_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         legacy.write.parquet(os.path.join(d, "batch=1"))
         current.write.parquet(os.path.join(d, "batch=2"))
 
-    out = _ensure_written(write, out)
+    out = _roundtrip_copy(spark, sf_dir, "parquet|schema-evo|v1", "orders", write)
     back = spark.read.option("mergeSchema", "true").parquet(out)
     return back.groupBy(
         "batch",
@@ -449,10 +278,6 @@ def src_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     cannot pass. The oracle computes the same receipt from the
     original table (and pins the file count as a literal).
     """
-    out = _artifact_dir(
-        sf_dir, f"parquet|compact|{COMPACT_INPUT_FILES}>{COMPACT_OUTPUT_FILES}", "events"
-    )
-
     def write(d: str) -> None:
         ev = load_table(spark, sf_dir, "events")
         frag_dir = os.path.join(d, "fragmented")
@@ -461,7 +286,13 @@ def src_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.path.join(d, "compacted")
         )
 
-    out = _ensure_written(write, out)
+    out = _roundtrip_copy(
+        spark,
+        sf_dir,
+        f"parquet|compact|{COMPACT_INPUT_FILES}>{COMPACT_OUTPUT_FILES}",
+        "events",
+        write,
+    )
     compact_dir = os.path.join(out, "compacted")
     n_files = sum(
         1
@@ -495,14 +326,16 @@ def src_gzip_jsonl_roundtrip_docs(spark: SparkSession, sf_dir: str) -> DataFrame
     exact char-count sum, so any mojibake, escaping loss, or truncation
     anywhere in the corpus flips the hash.
     """
-    out = _artifact_dir(sf_dir, "jsonl|gzip|v1", "documents")
-    out = _ensure_written(
+    out = _roundtrip_copy(
+        spark,
+        sf_dir,
+        "jsonl|gzip|v1",
+        "documents",
         lambda d: write_json(
             load_table(spark, sf_dir, "documents").repartition(4),
             d,
             options={"compression": "gzip"},
         ),
-        out,
     )
     back = read_json(spark, out, DOCS_SCHEMA)
     return back.groupBy("lang", "source").agg(
@@ -603,10 +436,6 @@ def src_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFra
     other four partitions — THE classic backfill data-loss incident
     this mode exists to prevent.
     """
-    out = _artifact_dir(
-        sf_dir, f"parquet|dyn-overwrite|{OVERWRITE_TYPE}>{OVERWRITE_MIN_VALUE}", "events"
-    )
-
     def write(d: str) -> None:
         ev = load_table(spark, sf_dir, "events").select(
             "event_id", "user_id", "value", "event_type"
@@ -623,7 +452,13 @@ def src_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFra
         finally:
             spark.conf.set("spark.sql.sources.partitionOverwriteMode", old)
 
-    out = _ensure_written(write, out)
+    out = _roundtrip_copy(
+        spark,
+        sf_dir,
+        f"parquet|dyn-overwrite|{OVERWRITE_TYPE}>{OVERWRITE_MIN_VALUE}",
+        "events",
+        write,
+    )
     back = spark.read.parquet(out)
     return back.groupBy("event_type").agg(
         F.count("*").alias("n_events"),
@@ -660,8 +495,6 @@ def src_fixed_width_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mit_map_reduce_spark.functions.columns import money_grains
     from mit_map_reduce_spark.sources.io import read_text_lines
 
-    out = _artifact_dir(sf_dir, "fixedwidth|v1", "orders")
-
     def write(d: str) -> None:
         orders = load_table(spark, sf_dir, "orders")
         fmt = "%018d%012d%-1s%015d%-15s"
@@ -675,7 +508,7 @@ def src_fixed_width_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         orders.select(line.alias("value")).repartition(4).write.text(d)
 
-    out = _ensure_written(write, out)
+    out = _roundtrip_copy(spark, sf_dir, "fixedwidth|v1", "orders", write)
     lines = read_text_lines(spark, out)
     pos, cols = 1, []
     for name, width in FW_LAYOUT:

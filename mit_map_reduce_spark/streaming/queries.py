@@ -48,6 +48,12 @@ from mit_map_reduce_spark.catalog import (
     table_path,
 )
 
+#: /dev/shm is RAM: below this much free space the stream scratch falls
+#: back to scratch_base(), so a large drain spills to disk instead of
+#: exhausting memory shared with the executors.
+SHM_MIN_FREE_BYTES = 1 << 30
+
+
 def _stream_scratch_root() -> str:
     """Base dir for the per-run streaming scratch. Everything under it
     is process-unique and swept at interpreter exit, so DURABILITY has
@@ -62,12 +68,15 @@ def _stream_scratch_root() -> str:
     SPARK_GRAFT_SCRATCH_DIR first — a multi-node cluster MUST route
     scratch through shared storage (catalog.scratch_base contract) and
     a deployment that wants disk-backed checkpoints sets it explicitly;
-    the fast default only applies single-machine."""
+    the fast default only applies single-machine, and only while
+    /dev/shm has ``SHM_MIN_FREE_BYTES`` free."""
     explicit = os.environ.get("SPARK_GRAFT_SCRATCH_DIR")
     if explicit:
         return explicit
     if os.path.isdir("/dev/shm") and os.access("/dev/shm", os.W_OK):
-        return "/dev/shm"
+        st = os.statvfs("/dev/shm")
+        if st.f_bavail * st.f_frsize >= SHM_MIN_FREE_BYTES:
+            return "/dev/shm"
     return scratch_base()
 
 

@@ -123,6 +123,25 @@ def test_rotate_priority_orders_red_then_stalest(tmp_path, monkeypatch):
     assert rotate_priority.main() == 2
 
 
+def test_rotate_priority_pin_file_usage_errors(tmp_path, monkeypatch, capsys):
+    # A missing or unreadable --pin-file value is a usage error (exit
+    # 2, message on stderr), never an IndexError/OSError traceback.
+    import importlib
+    import os
+    import sys
+
+    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
+    try:
+        rotate_priority = importlib.import_module("rotate_priority")
+    finally:
+        sys.path.pop(0)
+
+    for argv in (["--pin-file"], ["--pin-file", "--check"], ["--pin-file", str(tmp_path / "absent.txt")]):
+        monkeypatch.setattr(sys, "argv", ["rotate_priority.py", *argv])
+        assert rotate_priority.main() == 2
+        assert "pin-file" in capsys.readouterr().err
+
+
 def test_plan_snapshot_diff_flags_only_scale_regressions():
     # tools/plan_snapshot.py diffs plan shapes across rounds: more
     # shuffles, fewer broadcasts, or wider scans flag; improvements and

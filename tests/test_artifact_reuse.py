@@ -1,12 +1,13 @@
 """Second-invocation determinism for artifact-backed queries.
 
-Several queries materialize a reusable side artifact on first use (IVF
-centroids, bucketed warehouse tables, source-format round-trip copies)
-or probe session-shared caches (normed embeddings, shingle arrays,
-SimHash fingerprints). The driver and bench call each query more than
-once across a round, so the SECOND invocation — the one that hits the
-artifact/cache instead of building it — must produce byte-identical
-results. A stale or half-keyed artifact shows up here as a diff.
+Several queries materialize a session artifact on first use (IVF
+centroids, bucketed warehouse tables, source-format round-trip copies;
+``catalog.session_artifact``) or probe session-shared caches (normed
+embeddings, shingle arrays, SimHash fingerprints). The driver and
+bench call each query more than once across a round, so the SECOND
+invocation — the one that hits the artifact/cache instead of building
+it — must produce byte-identical results. A stale or half-keyed
+artifact shows up here as a diff.
 """
 
 import pytest
@@ -37,203 +38,112 @@ def test_second_invocation_identical(spark, sf_dir, name):
     assert len(first) > 0
 
 
-def test_artifact_keys_track_corpus_content(tmp_path):
-    """Regenerating a source table in place must yield a DIFFERENT
-    artifact key (round-4 advice: path-only keys aggregate stale bytes
-    after the driver rewrites testdata)."""
+def test_session_artifacts_stay_in_session_dir(spark, sf_dir, tmp_path, monkeypatch):
+    """Every artifact-backed query writes into the session's own
+    exit-swept dir — never into a cross-run store under scratch_base()
+    — and writes it once per session: a second call in the same
+    session reuses the registered path without running the writer."""
     import os
-    import shutil
 
-    from mit_map_reduce_spark.catalog import corpus_fingerprint, table_path
-    from mit_map_reduce_spark.operators.sources_queries import _artifact_dir
+    from mit_map_reduce_spark import catalog
+    from mit_map_reduce_spark.operators import sources_queries
 
-    sf = tmp_path / "sf"
-    sf.mkdir()
-    shutil.copy("/root/testdata/sf0.001/orders.parquet", table_path(str(sf), "orders"))
-    k1 = _artifact_dir(str(sf), "csv", "orders")
-    fp1 = corpus_fingerprint(str(sf), "orders")
-    # simulate in-place regeneration: same path, new bytes/mtime
-    p = table_path(str(sf), "orders")
-    st = os.stat(p)
-    os.utime(p, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000))
-    k2 = _artifact_dir(str(sf), "csv", "orders")
-    fp2 = corpus_fingerprint(str(sf), "orders")
-    assert fp1 != fp2
-    assert k1 != k2
-    # unchanged content -> stable key (artifacts still reused)
-    assert _artifact_dir(str(sf), "csv", "orders") == k2
+    session_dir = catalog._session_artifact_dir(spark)
+    # any store keyed on scratch_base() at call time would land here
+    monkeypatch.setenv("SPARK_GRAFT_SCRATCH_DIR", str(tmp_path))
+    real = catalog.session_artifact
+    writes = []
+
+    def spy(spark_, key, write_fn):
+        def counted(path):
+            writes.append(key)
+            write_fn(path)
+
+        return real(spark_, key, counted)
+
+    monkeypatch.setattr(catalog, "session_artifact", spy)
+    monkeypatch.setattr(sources_queries, "session_artifact", spy)
+    names = ("sim_ann_ivf_topk", "rel_bucketed_join_revenue", "src_csv_roundtrip_orders")
+    for name in names:
+        QUERIES[name](spark, sf_dir).collect()
+    # each writer ran at most once (earlier tests may have built some)
+    assert len(writes) == len(set(writes)), writes
+    ours = {
+        key: path
+        for (sid, key), path in catalog._SESSION_ARTIFACTS.items()
+        if sid == id(spark)
+    }
+    kinds = ("ivf_centroids|", "bucketed|b_lineitem_", "bucketed|b_orders_", "src_rt|orders|csv|")
+    for kind in kinds:
+        assert any(k.startswith(kind) for k in ours), (kind, sorted(ours))
+    assert all(p.startswith(session_dir + os.sep) for p in ours.values())
+    assert os.listdir(tmp_path) == []  # no mmrs_ivf_centroids/_bucketed/_source_rt
+
+    writes.clear()
+    for name in names:
+        QUERIES[name](spark, sf_dir).collect()
+    assert writes == []
 
 
-def test_publish_protocol_write_once_and_marker(tmp_path):
-    """The winner writes once, publishes atomically (marker inside the
-    renamed dir), and every later call reuses without re-invoking the
-    writer."""
-    from mit_map_reduce_spark.operators.sources_queries import (
-        _PUBLISH_MARKER,
-        _ensure_written,
-        _is_published,
-    )
+def test_session_artifact_registers_only_finished_writes(spark):
+    """A failed write registers nothing; the retry runs the writer
+    again into an emptied path, and only a finished write is reused."""
+    import os
 
-    out = str(tmp_path / "art")
-    calls = []
+    from mit_map_reduce_spark.catalog import _session_artifact_dir, session_artifact
 
-    def write(d):
-        import os
+    key = "test|session_artifact|retry"
 
-        os.makedirs(d, exist_ok=True)
-        calls.append(d)
-        with open(os.path.join(d, "data.txt"), "w") as fh:
+    def crash(path):
+        os.makedirs(path)
+        with open(os.path.join(path, "partial.txt"), "w") as fh:
+            fh.write("x")
+        raise RuntimeError("writer died mid-write")
+
+    with pytest.raises(RuntimeError):
+        session_artifact(spark, key, crash)
+    seen = []
+
+    def write(path):
+        seen.append(os.path.exists(path))
+        os.makedirs(path)
+        with open(os.path.join(path, "data.txt"), "w") as fh:
             fh.write("x")
 
-    got1 = _ensure_written(write, out)
-    got2 = _ensure_written(write, out)
-    assert got1 == got2 == out
-    assert len(calls) == 1
-    assert _is_published(out)
+    path = session_artifact(spark, key, write)
+    assert seen == [False]  # retry started from an empty path
+    assert session_artifact(spark, key, write) == path
+    assert seen == [False]  # reused, not rewritten
+    assert os.listdir(path) == ["data.txt"]
+    assert path.startswith(_session_artifact_dir(spark) + os.sep)
+
+
+def test_scratch_base_has_two_users():
+    """Only the catalog (session artifacts) and the streaming scratch
+    may call scratch_base(): any other caller would be a private
+    artifact store outside the session lifecycle, the shape the three
+    removed cross-run stores had."""
+    import ast
     import os
 
-    assert os.path.exists(os.path.join(out, _PUBLISH_MARKER))
-    assert not os.path.exists(out + ".lock")  # lock released
+    import mit_map_reduce_spark
 
-
-def test_publish_sweeps_aged_crash_leftovers(tmp_path):
-    """A writer that crashed between its rename steps leaves orphan
-    .tmp*/.trash* siblings nothing else reclaims (round-8 advice): the
-    next lock-winning writer sweeps AGED ones (beyond 4x the lock TTL
-    — sources writers have no mtime toucher) and keeps FRESH ones (a
-    concurrent live writer's in-flight dir must survive)."""
-    import os
-    import time
-
-    from mit_map_reduce_spark.operators.sources_queries import (
-        _LOCK_TTL_S,
-        _ensure_written,
-        _is_published,
-    )
-
-    out = str(tmp_path / "art")
-    aged_tmp, aged_trash = out + ".tmpdead1234", out + ".trashdead567"
-    fresh_tmp = out + ".tmplive9999"
-    for d in (aged_tmp, aged_trash, fresh_tmp):
-        os.makedirs(d)
-        with open(os.path.join(d, "junk.txt"), "w") as fh:
-            fh.write("x")
-    old = time.time() - (4 * _LOCK_TTL_S + 60)
-    for d in (aged_tmp, aged_trash):
-        os.utime(d, (old, old))
-
-    def write(d):
-        os.makedirs(d, exist_ok=True)
-        with open(os.path.join(d, "data.txt"), "w") as fh:
-            fh.write("x")
-
-    got = _ensure_written(write, out)
-    assert got == out and _is_published(out)
-    assert not os.path.exists(aged_tmp)
-    assert not os.path.exists(aged_trash)
-    assert os.path.exists(fresh_tmp)
-
-
-def test_publish_protocol_expires_stale_lock(tmp_path):
-    """A lock left by a crashed writer (old mtime, nothing published)
-    is expired so the SHARED path heals — no 30s wait, no pid-private
-    copy (round-6 ADVICE)."""
-    import os
-    import time
-
-    from mit_map_reduce_spark.operators.sources_queries import (
-        _LOCK_TTL_S,
-        _ensure_written,
-        _is_published,
-    )
-
-    out = str(tmp_path / "art")
-    lock = out + ".lock"
-    os.makedirs(lock)
-    old = time.time() - (_LOCK_TTL_S + 60)
-    os.utime(lock, (old, old))
-
-    def write(d):
-        os.makedirs(d, exist_ok=True)
-        with open(os.path.join(d, "data.txt"), "w") as fh:
-            fh.write("x")
-
-    t0 = time.monotonic()
-    got = _ensure_written(write, out)
-    assert time.monotonic() - t0 < 5.0  # healed, did not wait out the loop
-    assert got == out
-    assert _is_published(out)
-    assert not os.path.exists(lock)
-
-
-def test_publish_protocol_fresh_lock_falls_back_private(tmp_path, monkeypatch):
-    """A FRESH lock (writer plausibly alive) is respected: after the
-    bounded wait the caller writes a session-private copy and returns
-    its path — correctness before reuse."""
-    import os
-
-    from mit_map_reduce_spark.operators import sources_queries as sq
-    from mit_map_reduce_spark.operators.sources_queries import (
-        _ensure_written,
-        _is_published,
-    )
-
-    monkeypatch.setattr(sq, "_LOCK_POLL_S", 0.001)
-    out = str(tmp_path / "art")
-    os.makedirs(out + ".lock")  # fresh mtime: looks in-flight
-
-    def write(d):
-        os.makedirs(d, exist_ok=True)
-        with open(os.path.join(d, "data.txt"), "w") as fh:
-            fh.write("x")
-
-    got = _ensure_written(write, out)
-    assert got != out and got.startswith(out + ".pid")
-    assert _is_published(got)
-    assert not _is_published(out)
-
-
-def test_publish_protocol_restores_racer_artifact(tmp_path, monkeypatch):
-    """TOCTOU closure (round-7 advice): a racer that publishes between
-    _write_and_publish's marker check and its move-aside must have its
-    COMPLETE artifact restored (it may already have readers), with the
-    late writer's copy discarded — and nothing may rmtree the live
-    path in between."""
-    import os
-
-    from mit_map_reduce_spark.operators import sources_queries as sq
-
-    out = str(tmp_path / "art")
-    # The racer's complete published artifact is already in place ...
-    os.makedirs(out)
-    with open(os.path.join(out, sq._PUBLISH_MARKER), "w") as fh:
-        fh.write("ok\n")
-    with open(os.path.join(out, "racer.txt"), "w") as fh:
-        fh.write("theirs")
-    # ... but the first marker check misses it (the TOCTOU window).
-    real = sq._is_published
-    seen = {"n": 0}
-
-    def late_publish_view(d):
-        seen["n"] += 1
-        if seen["n"] == 1 and d == out:
-            return False
-        return real(d)
-
-    monkeypatch.setattr(sq, "_is_published", late_publish_view)
-
-    def write(d):
-        os.makedirs(d, exist_ok=True)
-        with open(os.path.join(d, "mine.txt"), "w") as fh:
-            fh.write("mine")
-
-    sq._write_and_publish(write, out)
-    # racer's artifact survived intact; ours was discarded; no scratch left
-    assert real(out)
-    assert os.path.exists(os.path.join(out, "racer.txt"))
-    assert not os.path.exists(os.path.join(out, "mine.txt"))
-    leftovers = [p for p in os.listdir(tmp_path) if p != "art"]
-    assert leftovers == [], leftovers
+    pkg = os.path.dirname(mit_map_reduce_spark.__file__)
+    callers = set()
+    for root, _, files in os.walk(pkg):
+        for f in files:
+            if not f.endswith(".py"):
+                continue
+            path = os.path.join(root, f)
+            with open(path) as fh:
+                tree = ast.parse(fh.read(), path)
+            for node in ast.walk(tree):
+                if isinstance(node, ast.Call):
+                    fn = node.func
+                    name = fn.id if isinstance(fn, ast.Name) else getattr(fn, "attr", None)
+                    if name == "scratch_base":
+                        callers.add(os.path.relpath(path, pkg))
+    assert callers == {"catalog.py", os.path.join("streaming", "queries.py")}
 
 
 def test_truncated_artifact_probe_passthrough_and_cleanup(spark):

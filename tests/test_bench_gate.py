@@ -502,3 +502,39 @@ def test_stamp_guard_detects_contention_wave(tmp_path):
     assert len(noisy) == 1 and "calibration_probe_sec" in noisy[0]
     # missing probe keys never flag (pre-probe sidecars)
     assert sb._probes_quiet({}, env) == []
+
+
+def test_stamp_wave_retries_reset_per_accepted_run(tmp_path, monkeypatch):
+    """The wave-retry budget is per stamped run: three waves before
+    each of two accepted runs must not exhaust it."""
+    import importlib
+    import sys
+    import types
+
+    sys.path.insert(0, os.path.join(REPO, "tools"))
+    try:
+        sb = importlib.import_module("stamp_bench")
+    finally:
+        sys.path.pop(0)
+
+    (tmp_path / "BENCH_DETAIL_r01.json").write_text(
+        json.dumps({"calibration_probe_sec": 0.6})
+    )
+    wave, quiet = 1.2, 0.6
+    probes = [wave] * 3 + [quiet] + [wave] * 3 + [quiet] * 2
+
+    def fake_run(cmd, env, cwd):
+        probe = probes.pop(0)
+        (tmp_path / "BENCH_DETAIL.json").write_text(
+            json.dumps({"value": 100.0 + probe, "calibration_probe_sec": probe})
+        )
+        return types.SimpleNamespace(returncode=0)
+
+    monkeypatch.setattr(sb, "REPO", str(tmp_path))
+    monkeypatch.setattr(sb.subprocess, "run", fake_run)
+    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", "/data/sf0.1")
+    monkeypatch.delenv("SPARK_GRAFT_STAMP_RUNS", raising=False)
+    sb.main()  # refused with SystemExit(3) when the budget never reset
+    assert probes == []
+    stamp = json.loads((tmp_path / "BENCH_DETAIL_r01.json").read_text())
+    assert stamp["median_of_3"]["calibration_probes_sec"] == [quiet] * 3

@@ -61,37 +61,48 @@ def test_bucketed_join_query_zero_exchange(spark, sf_dir, no_broadcast):
     assert count_shuffles(df2) == 0
 
 
-def test_bucketed_scratch_publishes_atomically(spark, sf_dir):
-    """The shared bucketed artifact is published via temp-dir +
-    os.rename (round-7 advice): after a fresh write the scratch base
-    holds only the final table dirs — no .wip/.trash leftovers — and
-    each published dir carries Spark's _SUCCESS marker."""
+def test_bucketed_scratch_publishes_atomically(spark, sf_dir, tmp_path, monkeypatch):
+    """The bucketed copies are session artifacts: both tables live in
+    the session's exit-swept artifact dir (no cross-run store under
+    scratch_base()), and each finished write carries the _SUCCESS
+    marker of Spark's output committer, which makes it atomic."""
     import os
 
+    from mit_map_reduce_spark.catalog import _session_artifact_dir
     from mit_map_reduce_spark.operators.relational import rel_bucketed_join_revenue
 
+    session_dir = _session_artifact_dir(spark)
+    # a store keyed on scratch_base() at call time would land here
+    monkeypatch.setenv("SPARK_GRAFT_SCRATCH_DIR", str(tmp_path))
     rel_bucketed_join_revenue(spark, sf_dir).count()
-    from mit_map_reduce_spark.operators.relational import bucketed_scratch_base
-
-    base = bucketed_scratch_base(sf_dir)
-    entries = sorted(os.listdir(base))
-    strays = [e for e in entries if ".wip" in e or ".trash" in e or ".lock" in e]
-    assert strays == [], strays
-    for sub in ("li", "ord"):
-        assert os.path.exists(os.path.join(base, sub, "_SUCCESS"))
+    assert os.listdir(tmp_path) == []
+    names = [
+        t.name
+        for t in spark.catalog.listTables()
+        if t.name.startswith(("b_lineitem_", "b_orders_"))
+    ]
+    assert len(names) == 2, names
+    for name in names:
+        rows = spark.sql(f"DESCRIBE TABLE EXTENDED {name}").collect()
+        loc = next(r.data_type for r in rows if r.col_name == "Location")
+        path = loc.removeprefix("file:")
+        assert path.startswith(session_dir + os.sep), (name, loc)
+        assert os.path.exists(os.path.join(path, "_SUCCESS"))
 
 
 def test_scratch_base_env_override(monkeypatch, tmp_path):
-    """Every cross-run scratch artifact keys off catalog.scratch_base()
-    so a multi-node deployment can point it at shared storage with
-    SPARK_GRAFT_SCRATCH_DIR; unset, it stays the local tempdir."""
+    """Session artifact dirs and the streaming scratch key off
+    catalog.scratch_base() so a multi-node deployment can point them at
+    shared storage with SPARK_GRAFT_SCRATCH_DIR; unset, it stays the
+    local tempdir."""
     import tempfile
 
-    from mit_map_reduce_spark.catalog import scratch_base
-    from mit_map_reduce_spark.operators.relational import bucketed_scratch_base
+    from mit_map_reduce_spark import catalog
 
     monkeypatch.delenv("SPARK_GRAFT_SCRATCH_DIR", raising=False)
-    assert scratch_base() == tempfile.gettempdir()
+    assert catalog.scratch_base() == tempfile.gettempdir()
     monkeypatch.setenv("SPARK_GRAFT_SCRATCH_DIR", str(tmp_path))
-    assert scratch_base() == str(tmp_path)
-    assert bucketed_scratch_base("/root/testdata/sf0.001").startswith(str(tmp_path))
+    assert catalog.scratch_base() == str(tmp_path)
+    # a new session's artifact dir lands under the override
+    monkeypatch.setattr(catalog, "_ARTIFACT_SCRATCH", {})
+    assert catalog._session_artifact_dir(object()).startswith(str(tmp_path))

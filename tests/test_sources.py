@@ -148,12 +148,16 @@ def test_gzip_jsonl_roundtrip_writes_gzip_parts(spark, sf_dir):
     # single giant .gz would serialize the scan).
     import os
     from mit_map_reduce_spark.operators.sources_queries import (
-        _artifact_dir,
+        _roundtrip_copy,
         src_gzip_jsonl_roundtrip_docs,
     )
 
     src_gzip_jsonl_roundtrip_docs(spark, sf_dir).count()
-    out = _artifact_dir(sf_dir, "jsonl|gzip|v1", "documents")
+
+    def no_rewrite(_):
+        raise AssertionError("session artifact rewritten")
+
+    out = _roundtrip_copy(spark, sf_dir, "jsonl|gzip|v1", "documents", no_rewrite)
     parts = [f for f in os.listdir(out) if f.endswith(".json.gz")]
     assert len(parts) >= 2
     with open(os.path.join(out, parts[0]), "rb") as fh:

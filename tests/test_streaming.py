@@ -293,3 +293,30 @@ def test_multi_grain_cube_labels_null_data_rows_as_data(spark):
     # day and grand-total rollups absorb both rows
     assert {r["n_events"] for r in by_grain["by_day"]} == {8}
     assert {r["n_events"] for r in by_grain["total"]} == {8}
+
+
+def test_stream_scratch_root_leaves_full_shm(monkeypatch):
+    """/dev/shm is RAM: the stream scratch uses it only while it has
+    SHM_MIN_FREE_BYTES free and otherwise falls back to scratch_base();
+    an explicit SPARK_GRAFT_SCRATCH_DIR always wins."""
+    import os
+
+    from mit_map_reduce_spark.catalog import scratch_base
+    from mit_map_reduce_spark.streaming import queries as sq
+
+    monkeypatch.delenv("SPARK_GRAFT_SCRATCH_DIR", raising=False)
+    monkeypatch.setattr(sq.os.path, "isdir", lambda p: True)
+    monkeypatch.setattr(sq.os, "access", lambda p, mode: True)
+    free = {"bytes": 0}
+
+    def fake_statvfs(path):
+        assert path == "/dev/shm"
+        return os.statvfs_result((4096, 4096, 0, 0, free["bytes"] // 4096, 0, 0, 0, 0, 255))
+
+    monkeypatch.setattr(sq.os, "statvfs", fake_statvfs)
+    free["bytes"] = sq.SHM_MIN_FREE_BYTES - 4096
+    assert sq._stream_scratch_root() == scratch_base()
+    free["bytes"] = sq.SHM_MIN_FREE_BYTES
+    assert sq._stream_scratch_root() == "/dev/shm"
+    monkeypatch.setenv("SPARK_GRAFT_SCRATCH_DIR", "/somewhere/shared")
+    assert sq._stream_scratch_root() == "/somewhere/shared"

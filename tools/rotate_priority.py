@@ -137,13 +137,20 @@ def main() -> int:
     check = "--check" in argv
     pinned: frozenset[str] = frozenset()
     if "--pin-file" in argv:
-        pf = argv[argv.index("--pin-file") + 1]
-        with open(pf) as fh:
-            pinned = frozenset(
-                line.strip()
-                for line in fh
-                if line.strip() and not line.lstrip().startswith("#")
-            )
+        i = argv.index("--pin-file") + 1
+        if i >= len(argv) or argv[i].startswith("--"):
+            print("usage: rotate_priority.py [--check] [--pin-file FILE]", file=sys.stderr)
+            return 2
+        try:
+            with open(argv[i]) as fh:
+                pinned = frozenset(
+                    line.strip()
+                    for line in fh
+                    if line.strip() and not line.lstrip().startswith("#")
+                )
+        except OSError as e:
+            print(f"--pin-file: cannot read {argv[i]}: {e.strerror}", file=sys.stderr)
+            return 2
     src = open(ENTRY).read()
     m = re.search(r"_PRIORITY = \[.*?\n\]", src, re.S)
     if not m:

@@ -102,6 +102,7 @@ def main() -> None:
     details: list[dict] = []
     env = dict(os.environ, SPARK_GRAFT_NO_STAMP="1", SPARK_GRAFT_SF_DIR=sf_dir)
     attempts = 0
+    retries = 0  # waves waited out since the last accepted run
     while len(details) < runs:
         attempts += 1
         t0 = time.monotonic()
@@ -119,7 +120,8 @@ def main() -> None:
         # wave outlasts the retries.
         noisy = _probes_quiet(d, envelope)
         if noisy:
-            if attempts - len(details) <= MAX_WAVE_RETRIES:
+            if retries < MAX_WAVE_RETRIES:
+                retries += 1
                 print(
                     f"# attempt {attempts}: contention wave detected "
                     f"({'; '.join(noisy)}) — run discarded, retrying",
@@ -134,6 +136,7 @@ def main() -> None:
             )
             sys.exit(3)
         details.append(d)
+        retries = 0
         print(
             f"# run {len(details)}/{runs}: total {d['value']}s, probe "
             f"{d.get('calibration_probe_sec')}s, io "

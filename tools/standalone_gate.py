@@ -9,7 +9,7 @@ processes in ``src/mr/worker.go:148-165``). This tool closes that
 fidelity gap: it boots a local Spark STANDALONE cluster (one master +
 N worker JVMs, each spawning its own executor process and python
 workers), points the engine at it via ``SPARK_GRAFT_MASTER``, routes
-all cross-run scratch through a shared ``SPARK_GRAFT_SCRATCH_DIR``,
+all scratch through a shared ``SPARK_GRAFT_SCRATCH_DIR``,
 and runs ``tools/check_correctness.py`` — the full 267-query gate —
 across actual process boundaries. What this exercises that
 ``local[*]`` cannot:
@@ -18,9 +18,9 @@ across actual process boundaries. What this exercises that
   callables by reference — executors must IMPORT the package
   (``spark.executorEnv.PYTHONPATH``), not inherit the driver's
   modules;
-* the artifact publish/lock protocol (bucketed tables, IVF
-  centroids, source round-trips) with readers and writers in
-  different processes against one shared scratch dir;
+* session artifacts (bucketed tables, IVF centroids, source
+  round-trips) written by executor processes into the driver's
+  session dir on one shared scratch dir and read back by others;
 * real shuffle data-plane between executor processes (netty fetch,
   not in-process handoff) and broadcast distribution to remote
   executors.
@@ -339,7 +339,7 @@ def run_gate(sf_dir: str, only: list[str], cluster: StandaloneCluster) -> int:
 
 #: Phase-A subset: the three shapes the verdict names — a shuffle-heavy
 #: relational query (real netty shuffle state to lose), a shared-scratch
-#: artifact build (the publish protocol must survive a writer/reader
+#: artifact build (the session artifact write must survive an executor
 #: process dying), and a streaming drain (micro-batch task retry against
 #: a shared checkpoint). Order matters: the kill fires once query 1 has
 #: PASSed and the artifact build has tasks in flight.
