@@ -42,10 +42,11 @@ def table_path(sf_dir: str, name: str) -> str:
 
 def scratch_base() -> str:
     """Root directory for per-process scratch: the session artifact
-    dirs (``session_artifact``) and the streaming feeds, sinks and
-    checkpoints. Nothing under it outlives the process that wrote it —
-    every user creates a process-unique subdirectory and sweeps it at
-    interpreter exit, so no run ever reads another run's files.
+    dirs (``session_artifact`` files, ``shared_persist`` checkpoints)
+    and the streaming feeds, sinks and checkpoints. Nothing under it
+    outlives the process that wrote it — every user creates a
+    process-unique subdirectory and sweeps it at interpreter exit, so
+    no run ever reads another run's files.
 
     Defaults to the machine-local tempdir — correct for any
     single-machine ``local[...]`` deployment, where driver and
@@ -169,7 +170,7 @@ def normalize_nanos_ts(df: DataFrame, col: str = "ts") -> DataFrame:
 #: once at 100 TB.
 _SHARED_CACHE: dict[tuple, DataFrame] = {}
 
-#: checkpoint-RDD id -> the PRE-truncation build frame. The r15 lineage
+#: checkpoint-RDD id -> the PRE-truncation build frame. The lineage
 #: truncation (see shared_persist) re-stores a materialized artifact
 #: behind a LogicalRDD leaf, which blinded every plan-introspection
 #: probe (plans.inspect.unpartitioned_corpus_windows, the repo-wide
@@ -180,13 +181,6 @@ _SHARED_CACHE: dict[tuple, DataFrame] = {}
 #: again. Query paths never touch it; only probes pay the build frame's
 #: (re-)analysis cost.
 _SHARED_BUILD_FRAMES: dict[int, DataFrame] = {}
-
-#: registry key -> the checkpointed JVM RDD. localCheckpoint blocks are
-#: NOT managed by the CacheManager, so DataFrame.unpersist() on the
-#: truncated frame is a no-op and repeated build/clear cycles (tests,
-#: long sessions) would accumulate orphaned checkpoint blocks (r15
-#: ADVICE); clear_shared_caches unpersists these explicitly.
-_CHECKPOINT_RDDS: dict[tuple, object] = {}
 
 
 #: (artifact name, factory seconds) per first-use build — bench drains
@@ -284,32 +278,16 @@ def session_artifact(spark: SparkSession, key: str, write_fn) -> str:
     return path
 
 
-def _materialize_artifact(
-    spark: SparkSession, df: DataFrame, name: str, sf_dir: str
-) -> DataFrame:
-    """Cluster-master twin of the local localCheckpoint truncation
-    (r15 verdict #3): write the already-computed artifact to session
-    scratch parquet and re-read it, so every consumer's plan is a leaf
-    file scan — O(1) analysis instead of re-analyzing the unrolled
-    fixpoint build, and (unlike checkpoint blocks) re-readable after
-    executor loss. Requires ``SPARK_GRAFT_SCRATCH_DIR`` on storage all
-    executors share (the standing scratch_base contract). Read back
-    with the frame's own schema so nullability survives the parquet
-    round-trip (bare parquet marks every column nullable, which would
-    ripple into consumer output schemas the oracle checks). A failed
-    write raises: a cluster master without shared scratch is a
-    deployment error, not a case to paper over."""
-    path = session_artifact(
-        spark, f"shared_persist|{sf_dir}|{name}", df.write.parquet
-    )
-    return spark.read.schema(df.schema).parquet(path)
-
-
 def shared_persist(
     spark: SparkSession, name: str, sf_dir: str, factory, label: str | None = None
 ) -> DataFrame:
     """Return the session's persisted copy of ``name`` for ``sf_dir``,
     building it via ``factory()`` on first use.
+
+    A factory that hands back an already-persisted frame (graph ranks,
+    dedup CC labels, ``functions.rank`` range partitions) is replaced
+    by a reliable checkpoint in the session dir's ``checkpoints/``
+    subdir; any other frame is persisted lazily.
 
     ``label`` names the build EVENT (bench's cold-build bookkeeping)
     when ``name`` is not cross-session-stable: rank registry keys are
@@ -331,68 +309,41 @@ def shared_persist(
         # already persisted+materialized; re-persisting would emit the
         # very CacheManager duplicate-cache warning this registry kills.
         if df.storageLevel.useMemory or df.storageLevel.useDisk:
-            if spark.sparkContext.master.startswith("local"):
-                # Truncate the unrolled-loop lineage (guide §3.3/§5,
-                # r15): a fixpoint artifact's cached frame still
-                # CARRIES its whole iterative build plan, and every
-                # consumer invocation re-analyzes that tree — measured
-                # 0.3-0.7 s of driver time PER CALL on the CC-label /
-                # graph-rank consumers (dedup_cluster_size_report's
-                # plan rendered 3136 Exchange nodes). The eager local
-                # checkpoint re-stores the already-materialized rows
-                # behind a leaf LogicalRDD — true cached stats carry
-                # over (verified: broadcasts still fire), analysis
-                # becomes O(1). local-master only: checkpoint blocks
-                # are not recomputable after executor loss, which is
-                # free under one JVM (block loss == session loss) but
-                # would break cluster fault-tolerance — cluster
-                # masters take the else branch below and materialize
-                # to shared-scratch parquet instead (r16; same leaf-
-                # scan benefit, executor-loss-safe).
-                ck = df.localCheckpoint(eager=True)
-                try:
-                    # LogicalRDD exposes the checkpoint RDD: key it for
-                    # the probe pass-through and the explicit cleanup
-                    # (both documented on the registries above).
-                    jrdd = ck._jdf.queryExecution().analyzed().rdd()
-                    _SHARED_BUILD_FRAMES[jrdd.id()] = df
-                    _CHECKPOINT_RDDS[key] = jrdd
-                except Exception:
-                    pass
-                df.unpersist()
-                df = ck
-            else:
-                # Cluster master: the consumer-side O(1)-analysis win
-                # must exist off local[...] too (r15 verdict #3) — the
-                # 100 TB doctrine form materializes the artifact to
-                # shared-scratch parquet; consumers scan a leaf.
-                out = _materialize_artifact(spark, df, name, sf_dir)
-                df.unpersist()
-                df = out
-            _SHARED_CACHE[key] = df
+            # Truncate the unrolled-loop lineage (guide §3.3/§5): a
+            # fixpoint artifact's cached frame still CARRIES its whole
+            # iterative build plan, and every consumer invocation
+            # re-analyzes that tree — measured 0.3-0.7 s of driver time
+            # PER CALL on the CC-label / graph-rank consumers
+            # (dedup_cluster_size_report's plan rendered 3136 Exchange
+            # nodes). The eager checkpoint writes the materialized rows
+            # to the session dir behind a leaf LogicalRDD: origin stats
+            # and exact schema carry over (broadcasts still fire),
+            # analysis is O(1), and on shared scratch the files survive
+            # executor loss — one path on every master.
+            sc = spark.sparkContext
+            if sc.getCheckpointDir() is None:
+                sc.setCheckpointDir(
+                    os.path.join(_session_artifact_dir(spark), "checkpoints")
+                )
+            ck = df.checkpoint(eager=True)
+            # LogicalRDD exposes the checkpointed RDD: key the probe
+            # pass-through on it (see _SHARED_BUILD_FRAMES).
+            rdd_id = ck._jdf.queryExecution().analyzed().rdd().id()
+            _SHARED_BUILD_FRAMES[rdd_id] = df
+            df.unpersist()
+            df = ck
         else:
             df = df.persist()
-            _SHARED_CACHE[key] = df
+        _SHARED_CACHE[key] = df
     return df
 
 
 def clear_shared_caches() -> None:
-    """Unpersist and forget every registry entry (tests / shutdown)."""
+    """Unpersist and forget every registry entry (tests / shutdown).
+    Checkpoint files stay in the session dir until its exit sweep."""
     for df in _SHARED_CACHE.values():
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-    # Checkpoint blocks live outside the CacheManager — free them
-    # explicitly (blocking=False: drop asynchronously, callers never
-    # need the space synchronously).
-    for jrdd in _CHECKPOINT_RDDS.values():
-        try:
-            jrdd.unpersist(False)
-        except Exception:
-            pass
+        df.unpersist()
     _SHARED_CACHE.clear()
-    _CHECKPOINT_RDDS.clear()
     _SHARED_BUILD_FRAMES.clear()
 
 

@@ -1203,7 +1203,7 @@ def _pq_subspace_codebook(sub_sample: DataFrame) -> DataFrame:
             .select("code", F.transform("jm", lambda s: s["m"]).alias("c"))
         )
     # Materialize the 8-row codebook eagerly so shared_persist adopts
-    # (and, under a local master, lineage-truncates) it: the lazy form
+    # (and lineage-truncates) it: the lazy form
     # kept the whole Lloyd-loop plan in the cache, and the four ADC /
     # encode consumers re-analyzed ~100-exchange trees per invocation
     # (r15; same class as the graph fixpoint caches).

@@ -190,20 +190,17 @@ def _inner_plans(node):
         except Exception:
             pass
     elif name == "RDDScanExec":
-        # A shared_persist artifact truncated behind a localCheckpoint
-        # leaf (catalog, r15): resolve the RDD id back to the stashed
+        # A shared_persist artifact truncated behind a checkpoint leaf
+        # (catalog, any master): resolve the RDD id back to the stashed
         # PRE-truncation build frame and keep descending, so structural
-        # pins still cover artifact internals (r15 ADVICE: the bare
-        # leaf silently blinded this probe repo-wide). Probe-only cost:
-        # the build frame re-plans here, never on query paths.
-        try:
-            from mit_map_reduce_spark.catalog import _SHARED_BUILD_FRAMES
+        # pins still cover artifact internals. An unregistered RDD
+        # yields nothing; a py4j error raises. Probe-only cost: the
+        # build frame re-plans here, never on query paths.
+        from mit_map_reduce_spark.catalog import _SHARED_BUILD_FRAMES
 
-            src = _SHARED_BUILD_FRAMES.get(node.rdd().id())
-            if src is not None:
-                yield _plan_root(src)
-        except Exception:
-            pass
+        src = _SHARED_BUILD_FRAMES.get(node.rdd().id())
+        if src is not None:
+            yield _plan_root(src)
 
 
 def _subquery_plans(node):

@@ -10,6 +10,8 @@ it — must produce byte-identical results. A stale or half-keyed
 artifact shows up here as a diff.
 """
 
+import os
+
 import pytest
 
 import __spark_entry__ as entrymod
@@ -146,51 +148,91 @@ def test_scratch_base_has_two_users():
     assert callers == {"catalog.py", os.path.join("streaming", "queries.py")}
 
 
-def test_truncated_artifact_probe_passthrough_and_cleanup(spark):
-    """The r15 localCheckpoint lineage truncation must not blind the
-    plan probes (r15 ADVICE): shared_persist stashes the PRE-truncation
-    build frame keyed by the checkpoint RDD id, and
-    unpartitioned_corpus_windows descends through the RDDScanExec leaf
-    into it. clear_shared_caches must also free the checkpoint blocks
-    themselves (they live outside the CacheManager, so plain
-    DataFrame.unpersist() is a no-op on them)."""
+def _windowed_artifact(spark, src_dir, name):
+    """A truncated shared_persist artifact whose build frame holds an
+    unpartitioned scan-rooted window — the exact shape the probe exists
+    to flag."""
     from pyspark.sql import Window, functions as F
+
+    from mit_map_reduce_spark import catalog
+
+    path = f"{src_dir}/probe_src.parquet"
+    spark.range(100).selectExpr("id", "id % 7 AS k").write.parquet(path)
+
+    def factory():
+        df = spark.read.parquet(path).withColumn(
+            "rn", F.row_number().over(Window.orderBy("id"))
+        )
+        df.persist().count()  # eager, like the fixpoint builders
+        return df
+
+    return catalog.shared_persist(spark, name, src_dir, factory)
+
+
+def _checkpoint_rdd_id(art) -> int:
+    return art._jdf.queryExecution().analyzed().rdd().id()
+
+
+def test_truncated_artifact_probe_passthrough_and_cleanup(spark, tmp_path):
+    """shared_persist truncates a persisted build frame with one path on
+    every master: a reliable checkpoint whose files live in the
+    session artifact dir. The truncation must not blind the plan
+    probes (r15 ADVICE): the PRE-truncation build frame is stashed
+    keyed by the checkpoint RDD id, and unpartitioned_corpus_windows
+    descends through the RDDScanExec leaf into it. clear_shared_caches
+    forgets the stash."""
+    from urllib.parse import urlparse
+
+    from pyspark.sql import functions as F
 
     from mit_map_reduce_spark import catalog
     from mit_map_reduce_spark.plans import unpartitioned_corpus_windows
 
-    # a build frame with an unpartitioned scan-rooted window inside —
-    # the exact shape the probe exists to flag
-    import tempfile
+    art = _windowed_artifact(spark, str(tmp_path), "test_probe_passthrough")
+    # truncated: the artifact frame itself is a checkpoint leaf ...
+    leaf = art._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" in leaf and "row_number" not in leaf
+    # ... but the probe still sees the window inside the build frame
+    consumer = art.groupBy("k").agg(F.max("rn").alias("m"))
+    assert len(unpartitioned_corpus_windows(consumer)) == 1
+    # the checkpoint files live in the session dir, swept at exit
+    ck_uri = spark.sparkContext.getCheckpointDir()
+    assert ck_uri is not None
+    ck_dir = urlparse(ck_uri).path
+    session_dir = os.path.realpath(catalog._session_artifact_dir(spark))
+    assert os.path.realpath(ck_dir).startswith(session_dir + os.sep)
+    rdd_dir = os.path.join(ck_dir, f"rdd-{_checkpoint_rdd_id(art)}")
+    assert any(f.startswith("part-") for f in os.listdir(rdd_dir))
+    catalog.clear_shared_caches()
+    assert catalog._SHARED_BUILD_FRAMES == {}
 
-    with tempfile.TemporaryDirectory() as d:
-        path = f"{d}/probe_src.parquet"
-        spark.range(100).selectExpr("id", "id % 7 AS k").write.parquet(path)
 
-        def factory():
-            df = (
-                spark.read.parquet(path)
-                .withColumn("rn", F.row_number().over(Window.orderBy("id")))
-            )
-            df.persist().count()  # eager, like the fixpoint builders
-            return df
+def test_probe_passthrough_raises_when_build_frame_unwalkable(
+    spark, tmp_path, monkeypatch
+):
+    """A py4j failure while resolving an artifact's build frame must
+    raise out of the probe, not end the walk with an empty (passing)
+    result."""
+    from py4j.protocol import Py4JError
+    from pyspark.sql import functions as F
 
-        art = catalog.shared_persist(
-            spark, "test_probe_passthrough", d, factory
-        )
-        # truncated: the artifact frame itself is a checkpoint leaf ...
-        leaf = art._jdf.queryExecution().executedPlan().toString()
-        assert "ExistingRDD" in leaf and "row_number" not in leaf
-        # ... but the probe still sees the window inside the build frame
-        consumer = art.groupBy("k").agg(F.max("rn").alias("m"))
-        assert len(unpartitioned_corpus_windows(consumer)) == 1
-        # checkpoint blocks are tracked and freed on clear
-        key = (id(spark), "test_probe_passthrough", d)
-        jrdd = catalog._CHECKPOINT_RDDS.get(key)
-        assert jrdd is not None
-        assert jrdd.id() in catalog._SHARED_BUILD_FRAMES
+    from mit_map_reduce_spark import catalog
+    from mit_map_reduce_spark.plans import inspect as inspect_mod
+    from mit_map_reduce_spark.plans import unpartitioned_corpus_windows
+
+    art = _windowed_artifact(spark, str(tmp_path), "test_probe_fail_loud")
+    build = catalog._SHARED_BUILD_FRAMES[_checkpoint_rdd_id(art)]
+    real_plan_root = inspect_mod._plan_root
+
+    def plan_root(df):
+        if df is build:
+            raise Py4JError("build frame plan unavailable")
+        return real_plan_root(df)
+
+    monkeypatch.setattr(inspect_mod, "_plan_root", plan_root)
+    consumer = art.groupBy("k").agg(F.max("rn").alias("m"))
+    try:
+        with pytest.raises(Py4JError):
+            unpartitioned_corpus_windows(consumer)
+    finally:
         catalog.clear_shared_caches()
-        assert catalog._CHECKPOINT_RDDS == {}
-        assert catalog._SHARED_BUILD_FRAMES == {}
-        # the unpersist call went through without raising; block drop is
-        # async (blocking=False) so we only pin the registry hygiene here

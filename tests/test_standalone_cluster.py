@@ -3,9 +3,9 @@
 Boots a real Spark standalone cluster — one master + two worker JVMs,
 each spawning its own executor process and python workers — and runs
 one query per family through it, exercising what ``local[*]`` cannot:
-closure/import shipping to foreign processes, the shared-scratch
-artifact publish protocol across process boundaries, and the real
-netty shuffle data plane.
+closure/import shipping to foreign processes, session artifacts and
+``shared_persist`` checkpoints written to shared scratch and read back
+across process boundaries, and the real netty shuffle data plane.
 
 Opt-in because it boots three JVMs and takes minutes:
 
@@ -34,7 +34,9 @@ pytestmark = pytest.mark.skipif(
 # process separation bites: pickled facade closures (mr_*), shared
 # bucketed/centroid artifacts (rel_bucketed/sim_ann_ivf), streaming
 # checkpoints on shared scratch (stream_*), python-worker Arrow
-# batches (dedup/mm), plain shuffle SQL (rel_q1/graph).
+# batches (dedup/mm), plain shuffle SQL (rel_q1/graph), shared_persist
+# checkpoints on shared scratch (graph_pagerank_trade ranks,
+# dedup_cluster_size_report CC labels).
 FAMILY_SAMPLE = [
     "mr_udtf_wordcount",
     "rel_q1_pricing_summary",
@@ -47,6 +49,7 @@ FAMILY_SAMPLE = [
     "mm_decode_assets",
     "sketch_hll_union_merge",
     "graph_pagerank_trade",
+    "dedup_cluster_size_report",
     "stream_error_rate_alerts",
     "src_csv_roundtrip_orders",
 ]

@@ -19,8 +19,9 @@ across actual process boundaries. What this exercises that
   (``spark.executorEnv.PYTHONPATH``), not inherit the driver's
   modules;
 * session artifacts (bucketed tables, IVF centroids, source
-  round-trips) written by executor processes into the driver's
-  session dir on one shared scratch dir and read back by others;
+  round-trips, ``shared_persist`` checkpoints) written by executor
+  processes into the driver's session dir on one shared scratch dir
+  and read back by others;
 * real shuffle data-plane between executor processes (netty fetch,
   not in-process handoff) and broadcast distribution to remote
   executors.
@@ -99,6 +100,11 @@ RESULTS (updated per committed run):
   rc=0, 85 s total.** First crash run through the r15 chunked \r/\n
   reader — the kill fired on a ConsoleProgressBar update, as
   intended.
+* shared_persist reliable-checkpoint subset (sf0.001, 4-vCPU host,
+  2 workers x 2 cores / 3g, executor mem 2g): graph_pagerank_trade,
+  graph_personalized_pagerank, dedup_cluster_size_report,
+  rel_trimmed_mean_acctbal **4/4 PASS, rc=0 in 70 s**, with the
+  artifact checkpoints in the driver's session dir on shared scratch.
 """
 
 from __future__ import annotations
